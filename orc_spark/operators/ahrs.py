@@ -11,7 +11,7 @@ This is a strictly sequential recurrence — each quaternion depends on the
 previous — so the Spark mapping is a grouped-map `applyInPandas` per run
 (O(1) state, numpy loop inside, Arrow batch I/O). Parallelism is ACROSS
 runs; one run never spans executors. Streaming variant: the same step
-function drives transformWithStateInPandas (orc_spark.streaming).
+function drives applyInPandasWithState (orc_spark.streaming.windows).
 
 ``f32=True`` replays the firmware's float32 arithmetic including the
 bit-trick fast inverse sqrt (FUSION_USE_NORMAL_SQRT is off in the vendored

@@ -107,8 +107,9 @@ def pid_scan(measurement: np.ndarray, setpoint, params: dict, f32: bool = True) 
     float64). Returns the float output BEFORE the (int16_t) return cast
     (PID.c:89); callers truncate if they want DAC codes."""
     if not f32:
-        return _pid_scan_fast_f64(measurement, setpoint, params)
-    dt = np.float32 if f32 else np.float64
+        out, _ = pid_scan_fast_f64(measurement, setpoint, params, (0.0,) * 4)
+        return out
+    dt = np.float32
     kp, ki, kd = dt(params["kp"]), dt(params["ki"]), dt(params["kd"])
     T, tau = dt(params["T"]), dt(params["tau"])
     lim_min, lim_max = dt(params["lim_min"]), dt(params["lim_max"])
@@ -145,15 +146,20 @@ def pid_scan(measurement: np.ndarray, setpoint, params: dict, f32: bool = True) 
     return out
 
 
-def _pid_scan_fast_f64(measurement: np.ndarray, setpoint, params: dict) -> np.ndarray:
+def pid_scan_fast_f64(
+    measurement: np.ndarray, setpoint, params: dict, state: tuple
+) -> tuple[np.ndarray, tuple]:
     """Plain-Python-float PID recurrence — identical f64 math, no per-step
-    numpy scalar overhead."""
+    numpy scalar overhead. Resumable: ``state`` is the 4-double carry
+    ``(integ, prev_err, diff, prev_m)`` going in, and the carry after the
+    last sample comes back as ``(out, state)`` — the streaming PID continues
+    it across micro-batches."""
     kp, ki, kd = params["kp"], params["ki"], params["kd"]
     T_, tau = params["T"], params["tau"]
     lim_min, lim_max = params["lim_min"], params["lim_max"]
     m = np.asarray(measurement, dtype=np.float64)
     sp_arr = np.broadcast_to(np.asarray(setpoint, dtype=np.float64), m.shape)
-    integ = prev_err = diff = prev_m = 0.0
+    integ, prev_err, diff, prev_m = state
     out = np.empty_like(m)
     two_tau_minus = 2.0 * tau - T_
     two_tau_plus = 2.0 * tau + T_
@@ -177,7 +183,7 @@ def _pid_scan_fast_f64(measurement: np.ndarray, setpoint, params: dict) -> np.nd
         out[i] = o
         prev_err = err
         prev_m = mi
-    return out
+    return out, (integ, prev_err, diff, prev_m)
 
 
 def pid_replay(

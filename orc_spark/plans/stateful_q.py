@@ -101,7 +101,7 @@ def _pid_sql() -> str:
     iteration for every run in parallel (max run length ≈ 90 → ≈ 90
     iterations). Every float constant is the repr round-trip of the exact
     double the Python engine folds (e.g. -2.0·kd → 3600.0), every
-    expression mirrors _pid_scan_fast_f64's operation order, and the
+    expression mirrors pid_scan_fast_f64's operation order, and the
     integrator is omitted because ki = -0.0 keeps it at +0.0 (adding +0.0
     cannot change prop + diff, and diff can never be -0.0 starting from
     0.0). Seed row is ord = -1 with zero state so every real sample goes

@@ -50,6 +50,14 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     setattr(spark.sparkContext, marker, True)
 
 
+def _default_driver_mem() -> str:
+    """A quarter of physical memory, 1 GB to 48 GB. In local mode the driver
+    JVM is the whole engine; a heap larger than the machine lets it grow
+    until the kernel OOM-kills it instead of collecting garbage."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(1024, min(48 * 1024, total_mb // 4))}m"
+
+
 def get_spark(app_name: str = "orc_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the session. ``cpus`` defaults to $SPARK_GRAFT_CPUS or 32."""
     if cpus is None:
@@ -79,7 +87,7 @@ def get_spark(app_name: str = "orc_spark", cpus: int | None = None) -> SparkSess
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         # no console progress bar: its \r frames pollute captured stdout
         # tails (the driver keeps ~2 KB of bench output) and add nothing in
@@ -91,7 +99,7 @@ def get_spark(app_name: str = "orc_spark", cpus: int | None = None) -> SparkSess
         # split small files aggressively so local[32] actually parallelizes
         # MB-scale inputs; at 100 TB raise maxPartitionBytes back to 128m+
         # (row groups bound the real split granularity there anyway)
-        .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.files.openCostInBytes", "1m")
         .config(
             "spark.sql.warehouse.dir",

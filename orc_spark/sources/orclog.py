@@ -30,11 +30,11 @@ Reference semantics preserved exactly:
     file order, matching the reference's list-append order.
 
 Order dependence & scale: line order is the ONLY ordering (no timestamps), so
-each file gets line numbers via a per-file ``zipWithIndex`` — order within a
-single text file is preserved by Hadoop line records across partitions. The
-100 TB path shards across *files* (window partitions by ``file``), never
-within one log file; a single log file is a few MB at most (the firmware
-rotates by session), so one file per window partition is cluster-safe.
+each file is read whole and its lines numbered by ``posexplode`` (see
+``explode_lines``). The 100 TB path shards across *files* (window partitions
+by ``file``), never within one log file; a single log file is a few MB at most
+(the firmware rotates by session), so one file per window partition is
+cluster-safe.
 """
 
 from __future__ import annotations
@@ -42,14 +42,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-LINES_SCHEMA = T.StructType(
-    [
-        T.StructField("file", T.StringType(), False),
-        T.StructField("line_no", T.LongType(), False),
-        T.StructField("value", T.StringType(), True),
-    ]
-)
 
 ORCLOG_SCHEMA = T.StructType(
     [
@@ -68,49 +60,37 @@ ORCLOG_SCHEMA = T.StructType(
 )
 
 
-def read_log_lines(
-    spark: SparkSession, paths: list[str] | str, method: str = "wholetext"
-) -> DataFrame:
+def explode_lines(files: DataFrame) -> DataFrame:
+    """(file, value=whole file text) → (file, line_no, value), one row per line.
+
+    The one place the ORCLOG line rule lives: split on ``\\r?\\n`` (CRLF-safe;
+    Hadoop's line reader would strip ``\\r``, so this path must too) and let
+    ``posexplode`` number the lines — exact per-file order by construction,
+    pure JVM (no Python row serialization). The batch read and the streaming
+    micro-batch both go through here.
+    """
+    return files.select(
+        "file",
+        F.posexplode(F.split(F.col("value"), "\r?\n")).alias("line_no", "value"),
+    ).select("file", F.col("line_no").cast("long").alias("line_no"), "value")
+
+
+def read_log_lines(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     """Read log files as (file, line_no, value) preserving per-file order.
 
-    Default ``wholetext``: one row per file, split into lines with
-    ``posexplode`` — a pure-JVM path (no Python row serialization), exact
-    line numbers by construction, parallel across files. Log files are MB
-    scale (firmware session rotation), so whole-file rows are bounded.
-
-    ``zipindex`` fallback for single files too large to hold as one row:
-    Hadoop text splits preserve line order across partition indices within a
-    file, so RDD ``zipWithIndex`` is the physical line number — at the cost
-    of routing rows through Python.
+    One row per file, parallel across files. Log files are MB scale
+    (firmware session rotation), so whole-file rows are bounded.
     """
     if isinstance(paths, str):
         paths = [paths]
-    if method == "wholetext":
-        # NB: must be the wholetext= kwarg (or .format("text").load()):
-        # DataFrameReader.text() overwrites a previously .option()-set
-        # "wholetext" with its own default, silently reverting to per-line
-        # rows — which zeroes every posexplode position.
-        files = spark.read.text(paths, wholetext=True).select(
-            F.input_file_name().alias("file"), "value"
-        )
-        return files.select(
-            "file",
-            # CRLF-safe split; Hadoop's line reader would strip \r, so the
-            # explode path must too
-            F.posexplode(F.split(F.col("value"), "\r?\n")).alias("line_no", "value"),
-        ).select("file", F.col("line_no").cast("long").alias("line_no"), "value")
-    dfs = []
-    for p in paths:
-        rdd = (
-            spark.sparkContext.textFile(p)
-            .zipWithIndex()
-            .map(lambda kv, _p=p: (_p, kv[1], kv[0]))
-        )
-        dfs.append(spark.createDataFrame(rdd, LINES_SCHEMA))
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
+    # NB: must be the wholetext= kwarg (or .format("text").load()):
+    # DataFrameReader.text() overwrites a previously .option()-set
+    # "wholetext" with its own default, silently reverting to per-line
+    # rows — which zeroes every posexplode position.
+    files = spark.read.text(paths, wholetext=True).select(
+        F.input_file_name().alias("file"), "value"
+    )
+    return explode_lines(files)
 
 
 def parse_orclog(

@@ -3,10 +3,10 @@
 Streaming model (SURVEY §2.A O12-O15): the log format is order-dependent
 WITHIN a file and independent ACROSS files, so the streaming unit is the
 file. `spark.readStream.text(..., wholetext=True)` delivers one row per
-newly-arrived file per micro-batch; `posexplode(split(..))` recovers exact
-line numbers declaratively (no RDD), and the batch parser's window plan runs
-unchanged inside each micro-batch. Rate limiting (the firmware's bounded
-queue, O12) maps to `maxFilesPerTrigger`.
+newly-arrived file per micro-batch; the batch reader's `explode_lines`
+recovers exact line numbers declaratively (no RDD), and the batch parser's
+window plan runs unchanged inside each micro-batch. Rate limiting (the
+firmware's bounded queue, O12) maps to `maxFilesPerTrigger`.
 
 The sink side (O13/O14) writes byte-compatible firmware logs — "%.4f, %.4f,
 %.4f" rows framed by `Log #:` / `Actuators` / `Interval:` / header markers
@@ -21,18 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orc_spark.sources.orclog import parse_orclog
-
-
-def lines_from_wholetext(files: DataFrame) -> DataFrame:
-    """(value=whole file, path) → (file, line_no, value) with exact order."""
-    return (
-        files.select(
-            F.col("path").alias("file"),
-            F.posexplode(F.split(F.col("value"), "\n")).alias("line_no", "value"),
-        )
-        .select("file", F.col("line_no").cast("long").alias("line_no"), "value")
-    )
+from orc_spark.sources.orclog import explode_lines, parse_orclog
 
 
 def stream_orclog_parse(
@@ -51,11 +40,11 @@ def stream_orclog_parse(
         .option("wholetext", "true")
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(in_dir)
-        .withColumn("path", F.col("_metadata.file_path"))
+        .select(F.col("_metadata.file_path").alias("file"), "value")
     )
 
     def handle_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        lines = lines_from_wholetext(batch_df)
+        lines = explode_lines(batch_df)
         parsed = parse_orclog(batch_df.sparkSession, lines=lines)
         parsed.write.mode("append").format(out_format).save(out_dir)
 
@@ -76,9 +65,7 @@ def write_orclog_format_distributed(
     executors: one byte-compatible CSV (ORC_Main.c:774-856 framing) per
     (file, actuators_enabled) group, written from the grouped map that owns
     the group — only the tiny manifest (group → path, row count) crosses the
-    driver. This is the production counterpart of write_orclog_format below
-    (which collects and is kept only for small round-trip fixtures, per
-    VERDICT r01 item 5).
+    driver (VERDICT r01 item 5: no driver-side collect).
 
     Scale contract: a group is one source log's population — bounded by what
     the firmware wrote to one SD file — and groups parallelize freely;
@@ -146,45 +133,3 @@ def write_orclog_format_distributed(
         )
 
     return rows.groupBy("file", "actuators_enabled").applyInPandas(render, schema)
-
-
-def write_orclog_format(
-    df: DataFrame,
-    path: str,
-    log_id: int = 1,
-    interval_s: float = 0.000282,
-) -> None:
-    """Render a canonical orclog DataFrame back to firmware CSV bytes
-    (ORC_Main.c:774-856 framing, one file per (file, actuators_enabled)
-    group in input order). DRIVER-SIDE collect — small round-trip fixtures
-    only; the production sink is write_orclog_format_distributed above."""
-    rows = (
-        df.select(
-            "actuators_enabled",
-            "run_idx",
-            "sample_idx",
-            F.format_string(
-                "%.4f, %.4f, %.4f", F.col("accel_g"), F.col("pitch_deg"), F.col("roll_deg")
-            ).alias("line"),
-        )
-        .orderBy("actuators_enabled", "run_idx", "sample_idx")
-        .collect()
-    )
-    groups: dict[bool, list] = {}
-    for r in rows:
-        groups.setdefault(r["actuators_enabled"], []).append(r)
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as fh:
-        lid = log_id
-        for enabled, grp in groups.items():
-            fh.write(f"Log #: {lid}\n")
-            fh.write(f"Actuators {'enabled' if enabled else 'disabled'}\n")
-            fh.write(f"Interval:{interval_s:f}\n")
-            fh.write("Acceleration, Pitch, Roll\n")
-            prev_run = grp[0]["run_idx"]
-            for r in grp:
-                if r["run_idx"] != prev_run:
-                    fh.write("Log Paused, now resuming:\n")
-                    prev_run = r["run_idx"]
-                fh.write(r["line"] + "\n")
-            lid += 1

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from orc_spark.operators.control import pid_params
+from orc_spark.operators.control import pid_scan_fast_f64
 
 
 def stream_event_windows(
@@ -75,51 +75,23 @@ def pid_stream_output_schema(key_field: T.StructField) -> T.StructType:
 
 def make_pid_stateful_fn(params: dict, setpoint: float = 0.0):
     """Builds the applyInPandasWithState function: continues the PID
-    recurrence across micro-batches via 4 floats of group state. Float64
-    (streaming mode documents f64; strict-f32 replay is the batch path)."""
-    kp, ki, kd = params["kp"], params["ki"], params["kd"]
-    T_, tau = params["T"], params["tau"]
-    lim_min, lim_max = params["lim_min"], params["lim_max"]
+    recurrence of ``control.pid_scan_fast_f64`` across micro-batches via its
+    4-double state. Float64 (streaming mode documents f64; strict-f32 replay
+    is the batch path). Output is the raw float, matching batch pid_scan
+    (callers truncate to int16 for DAC codes)."""
 
     def fn(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            integ, prev_err, diff, prev_m = state.get
-        else:
-            integ = prev_err = diff = prev_m = 0.0
+        st = state.get if state.exists else (0.0,) * 4
         outs = []
         for pdf in pdfs:
             pdf = pdf.sort_values("ord")
-            m = pdf["meas"].to_numpy()
-            out = []
-            for mi in m:
-                err = setpoint - mi
-                prop = kp * err
-                integ = integ + 0.5 * ki * T_ * (err + prev_err)
-                lim_max_int = lim_max - prop if lim_max > prop else 0.0
-                lim_min_int = lim_min - prop if lim_min < prop else 0.0
-                # exact clamp branch order of PID.c:55-60
-                if integ > lim_max_int:
-                    integ = lim_max_int
-                elif integ < lim_min_int:
-                    integ = lim_min_int
-                diff = (-2.0 * kd * (mi - prev_m) + (2.0 * tau - T_) * diff) / (
-                    2.0 * tau + T_
-                )
-                o = prop + integ + diff
-                if o > lim_max:
-                    o = lim_max
-                elif o < lim_min:
-                    o = lim_min
-                # raw float output, matching batch pid_scan (callers truncate
-                # to int16 for DAC codes)
-                out.append(o)
-                prev_err, prev_m = err, mi
+            out, st = pid_scan_fast_f64(pdf["meas"], setpoint, params, st)
             pdf = pdf.copy()
             pdf["pid_out"] = out
             outs.append(pdf)
-        state.update((float(integ), float(prev_err), float(diff), float(prev_m)))
+        state.update(st)
         yield from outs
 
     return fn
@@ -141,104 +113,6 @@ def pid_streaming(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# --- PID via transformWithStateInPandas (Spark 4 stateful API) ---------------
-
-try:  # Spark >= 4.0
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class PidStatefulProcessor(StatefulProcessor):
-        """The same PID recurrence as make_pid_stateful_fn, expressed through
-        the modern transformWithStateInPandas API (typed ValueState handle,
-        RocksDB-backed): state is the identical 4-double tuple, so
-        stream == batch holds by the same argument. Kept alongside the
-        applyInPandasWithState operator to cover both stateful surfaces."""
-
-        def __init__(self, params: dict, setpoint: float = 0.0):
-            self._params = dict(params)
-            self._setpoint = setpoint
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("pid", _PID_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            p = self._params
-            kp, ki, kd = p["kp"], p["ki"], p["kd"]
-            T_, tau = p["T"], p["tau"]
-            lim_min, lim_max = p["lim_min"], p["lim_max"]
-            setpoint = self._setpoint
-            st = self._state.get() if self._state.exists() else None
-            integ, prev_err, diff, prev_m = st or (0.0, 0.0, 0.0, 0.0)
-            outs = []
-            for pdf in rows:
-                pdf = pdf.sort_values("ord")
-                out = []
-                for mi in pdf["meas"].to_numpy():
-                    err = setpoint - mi
-                    prop = kp * err
-                    integ = integ + 0.5 * ki * T_ * (err + prev_err)
-                    lim_max_int = lim_max - prop if lim_max > prop else 0.0
-                    lim_min_int = lim_min - prop if lim_min < prop else 0.0
-                    if integ > lim_max_int:
-                        integ = lim_max_int
-                    elif integ < lim_min_int:
-                        integ = lim_min_int
-                    diff = (-2.0 * kd * (mi - prev_m) + (2.0 * tau - T_) * diff) / (
-                        2.0 * tau + T_
-                    )
-                    o = prop + integ + diff
-                    if o > lim_max:
-                        o = lim_max
-                    elif o < lim_min:
-                        o = lim_min
-                    out.append(o)
-                    prev_err, prev_m = err, mi
-                pdf = pdf.copy()
-                pdf["pid_out"] = out
-                outs.append(pdf)
-            self._state.update(
-                (float(integ), float(prev_err), float(diff), float(prev_m))
-            )
-            yield from outs
-
-        def close(self) -> None:
-            pass
-
-    def pid_streaming_tws(
-        stream_df: DataFrame,
-        key_col: str,
-        params: dict,
-        setpoint: float = 0.0,
-    ) -> DataFrame:
-        """transformWithStateInPandas route for the stateful PID. Requires the
-        RocksDB state store (set on the session here — the TWS operator does
-        not support the default HDFS-backed provider) AND the
-        ``google.protobuf`` Python package (the TWS driver worker speaks
-        protobuf to the JVM). This container ships no protobuf, so the test
-        for this route skips here and the applyInPandasWithState operator
-        above remains the exercised stateful path; on a standard cluster
-        image (protobuf is a pyspark[connect] dependency) this route runs
-        as-is."""
-        stream_df.sparkSession.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        key_field = stream_df.schema[key_col]
-        return stream_df.groupBy(key_col).transformWithStateInPandas(
-            PidStatefulProcessor(params, setpoint),
-            outputStructType=pid_stream_output_schema(key_field),
-            outputMode="append",
-            timeMode="None",
-        )
-
-except ImportError:  # pragma: no cover - Spark < 4 fallback
-    PidStatefulProcessor = None  # type: ignore[assignment]
-    pid_streaming_tws = None  # type: ignore[assignment]
 
 
 # --- stateful streaming AHRS (O4 as a stream operator) -----------------------
