@@ -10,21 +10,12 @@
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf, udtf
+from pyspark.sql.functions import udtf
 
 from orc_spark.operators.control import A_2AB, B_2AB, INV_2AB, INV_2CD
-
-
-@pandas_udf(T.DoubleType())
-def _t_cdf_udf(t: pd.Series, dof: pd.Series) -> pd.Series:
-    from orc_spark.functions.stat_math import student_t_cdf
-
-    return pd.Series(student_t_cdf(t.to_numpy(), dof.to_numpy()))
+from orc_spark.operators.stats import _t_cdf
 
 
 @udtf(returnType="kind string, log_id int, enabled boolean, interval_s double, "
@@ -66,7 +57,7 @@ class ParseOrclogLine:
 
 
 def register_all(spark: SparkSession) -> None:
-    spark.udf.register("orc_t_cdf", _t_cdf_udf)
+    spark.udf.register("orc_t_cdf", _t_cdf)
     spark.udf.register(
         "orc_deadband",
         lambda x, floor: (

@@ -2,9 +2,12 @@
 
 Two-level aggregation (per-run stats → per-group means) is native Spark
 partial/final aggregation. The Welch t-test is a closed-form expression over
-per-group (n, mean, var) aggregates — one tiny 2-row join, no data movement —
-with the Student-t CDF evaluated in a vectorized pandas UDF (scipy), i.e.
-Python only touches a handful of rows, never the data.
+per-side (n, mean, var) aggregates — conditional aggregates of ONE global
+aggregation, so every upstream stage runs once and no join is needed — with
+the Student-t CDF evaluated in a vectorized pandas UDF, i.e. Python only
+touches a handful of rows, never the data. ``welch_sides``/``welch_t``/
+``p_value`` are the one Welch rule shared by ``welch_ttest`` and the two
+full-report plans (plans/orclog_e2e.py, plans/e2e_q.py).
 """
 
 from __future__ import annotations
@@ -53,7 +56,8 @@ def group_means(stats_df: DataFrame, group_cols: Sequence[str]) -> DataFrame:
 
 # DataType instance (not DDL string) so the decorator works without an
 # active SparkContext at import time. The UDF only ever sees a handful of
-# rows (one per tested metric), so the Python boundary cost is nil.
+# rows (one per tested metric), so the Python boundary cost is nil. SQL
+# users get the same UDF as orc_t_cdf (functions/register.py).
 @pandas_udf(DoubleType())
 def _t_cdf(t: pd.Series, dof: pd.Series) -> pd.Series:
     from orc_spark.functions.stat_math import student_t_cdf
@@ -61,18 +65,53 @@ def _t_cdf(t: pd.Series, dof: pd.Series) -> pd.Series:
     return pd.Series(student_t_cdf(t.to_numpy(), dof.to_numpy()))
 
 
-def welch_components(v1: Column, n1: Column, v2: Column, n2: Column):
-    """Welch t denominator pieces: (se^2, dof) from sample variances/counts.
-    Zero variance on BOTH sides makes the dof denominator exactly 0 (and
-    sqrt(se2) 0 in the caller) — NULL, not an ANSI DIVIDE_BY_ZERO; n=1
-    sides are already NULL via var_samp."""
-    q1 = v1 / n1
-    q2 = v2 / n2
+def welch_sides(df: DataFrame, on: Column, cols: Sequence[str]) -> DataFrame:
+    """One global aggregate of the two populations ``on`` and ``NOT on``:
+    ``n_on``/``n_off`` (row counts, double) and ``avg_<c>_on``/``var_<c>_on``/
+    ``avg_<c>_off``/``var_<c>_off`` for every column c. Rows where ``on`` is
+    NULL belong to neither side. One row, or none when a side is empty
+    (the global aggregate alone would emit a row of NULLs there)."""
+    aggs = []
+    for side, cond in (("on", on), ("off", ~on)):
+        aggs.append(F.count(F.when(cond, 1)).cast("double").alias(f"n_{side}"))
+        for c in cols:
+            x = F.when(cond, F.col(c))
+            aggs += [
+                F.avg(x).alias(f"avg_{c}_{side}"),
+                F.var_samp(x).alias(f"var_{c}_{side}"),
+            ]
+    return df.agg(*aggs).where((F.col("n_on") > 0) & (F.col("n_off") > 0))
+
+
+def welch_t(c: str) -> tuple[Column, Column]:
+    """Welch (t, dof) of column c over ``welch_sides`` output, population a =
+    on. Zero variance on BOTH sides makes sqrt(se2) and the dof denominator
+    exactly 0: NULL, not an ANSI DIVIDE_BY_ZERO (scipy: NaN); n=1 sides are
+    already NULL via var_samp."""
+    n1, n2 = F.col("n_on"), F.col("n_off")
+    q1 = F.col(f"var_{c}_on") / n1
+    q2 = F.col(f"var_{c}_off") / n2
     se2 = q1 + q2
+    t = (F.col(f"avg_{c}_on") - F.col(f"avg_{c}_off")) / F.nullif(
+        F.sqrt(se2), F.lit(0.0)
+    )
     dof = (se2 * se2) / F.nullif(
         q1 * q1 / (n1 - 1) + q2 * q2 / (n2 - 1), F.lit(0.0)
     )
-    return se2, dof
+    return t, dof
+
+
+def p_value(t: Column, dof: Column, alternative: str) -> Column:
+    """p of the t statistic: 'less' | 'greater' | 'two-sided' (one-sided as
+    in the reference: RMS 'less', min 'greater', max 'less')."""
+    cdf = _t_cdf(t, dof)
+    if alternative == "less":
+        return cdf
+    if alternative == "greater":
+        return F.lit(1.0) - cdf
+    if alternative == "two-sided":
+        return F.lit(2.0) * F.least(cdf, F.lit(1.0) - cdf)
+    raise ValueError(f"unknown alternative: {alternative}")
 
 
 def welch_ttest(
@@ -80,50 +119,18 @@ def welch_ttest(
     value_col: str,
     group_col: str | Column,
     alternative: str = "two-sided",
-    with_p: bool = True,
 ) -> DataFrame:
     """Welch two-sample t-test, ``scipy.stats.ttest_ind(a, b, equal_var=False,
     alternative=...)`` semantics (reference main.py:113-115).
 
     ``group_col`` must be boolean; population *a* is group_col==true (for the
     reference pipeline: actuators enabled — first in file order, main.py:113).
-    Returns one row: (t_stat, dof[, p_value]). Sample variance (ddof=1)
-    matches numpy/scipy. Degenerate inputs (n<2, zero variance) produce
-    NaN/null exactly as scipy does.
-
-    alternative: 'two-sided' | 'less' | 'greater' (one-sided as in the
-    reference: RMS 'less', min 'greater', max 'less').
+    Returns one row: (t_stat, dof, p_value), none if a population is empty.
+    Sample variance (ddof=1) matches numpy/scipy. Degenerate inputs (n<2,
+    zero variance) produce null where scipy gives NaN.
     """
     gcol = F.col(group_col) if isinstance(group_col, str) else group_col
-    agg = df.groupBy(gcol.alias("__g")).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.avg(value_col).alias("mean"),
-        F.var_samp(value_col).alias("var"),
-    )
-    a = agg.where(F.col("__g")).select(
-        F.col("n").alias("n1"), F.col("mean").alias("m1"), F.col("var").alias("v1")
-    )
-    b = agg.where(~F.col("__g")).select(
-        F.col("n").alias("n2"), F.col("mean").alias("m2"), F.col("var").alias("v2")
-    )
-    j = a.crossJoin(b)
-    se2, dof = welch_components(F.col("v1"), F.col("n1"), F.col("v2"), F.col("n2"))
-    j = j.select(
-        (
-            (F.col("m1") - F.col("m2"))
-            / F.nullif(F.sqrt(se2), F.lit(0.0))
-        ).alias("t_stat"),
-        dof.alias("dof"),
-    )
-    if not with_p:
-        return j
-    cdf = _t_cdf(F.col("t_stat"), F.col("dof"))
-    if alternative == "less":
-        p = cdf
-    elif alternative == "greater":
-        p = F.lit(1.0) - cdf
-    elif alternative == "two-sided":
-        p = F.lit(2.0) * F.least(cdf, F.lit(1.0) - cdf)
-    else:
-        raise ValueError(f"unknown alternative: {alternative}")
-    return j.withColumn("p_value", p)
+    t, dof = welch_t(value_col)
+    return welch_sides(df, gcol, [value_col]).select(
+        t.alias("t_stat"), dof.alias("dof")
+    ).withColumn("p_value", p_value(F.col("t_stat"), F.col("dof"), alternative))

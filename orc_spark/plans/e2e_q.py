@@ -17,9 +17,10 @@ aggregate from the parquet view, so a green hash proves write/read fidelity.
 
 Plan shape of the e2e (mirrors orclog_e2e.py): ONE window stage (median
 filter + gradient share the per-run sort), ONE per-run aggregation for all
-6 metric×stat values, ONE per-group aggregation for every mean/var/count,
-then a 1×1 cross join and an explode over metric structs. Two data shuffles
-end-to-end regardless of metric count.
+6 metric×stat values, ONE global aggregation of per-side conditional
+aggregates for every mean/var/count (operators/stats.welch_sides), then an
+explode over metric structs. Two data shuffles end-to-end regardless of
+metric count.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from orc_spark.functions.hashing import h60_sql
-from orc_spark.operators.stats import welch_components
+from orc_spark.operators.stats import welch_sides, welch_t
 from orc_spark.operators.timeseries import median_filter, np_gradient
 from orc_spark.plans import Query
 from orc_spark.sources.tables import load_table
@@ -38,7 +39,7 @@ from orc_spark.sources.tables import load_table
 GROUPS = ("click", "view")  # populations: on = click, off = view
 RUN = ["user_id", "event_type"]
 ORD = "ord"
-ALTS = {"rms": "less", "min": "greater", "max": "less"}
+STATS = ("rms", "min", "max")
 METRICS = ("value", "jerk")
 
 
@@ -64,44 +65,25 @@ def ts_e2e_report(spark: SparkSession, sf: str) -> DataFrame:
         ]
     per_run = filt.groupBy(*RUN).agg(*aggs)
 
-    gaggs = [F.count(F.lit(1)).cast("double").alias("n_runs")]
-    for m in METRICS:
-        for stat in ("rms", "min", "max"):
-            col = f"{stat}_{m}"
-            gaggs += [
-                F.avg(col).alias(f"avg_{col}"),
-                F.var_samp(col).alias(f"var_{col}"),
-            ]
-    g = per_run.groupBy("event_type").agg(*gaggs)
-
-    on = g.where(F.col("event_type") == GROUPS[0]).drop("event_type")
-    off = g.where(F.col("event_type") == GROUPS[1]).drop("event_type")
-    off = off.select([F.col(c).alias(f"{c}__off") for c in off.columns])
-    wide = on.crossJoin(off)
+    wide = welch_sides(
+        per_run,
+        F.col("event_type") == GROUPS[0],
+        [f"{stat}_{m}" for m in METRICS for stat in STATS],
+    )
 
     metric_structs = []
     for m in METRICS:
         fields = [
             F.lit(m).alias("metric"),
-            F.col("n_runs").cast("bigint").alias("n_runs_on"),
-            F.col("n_runs__off").cast("bigint").alias("n_runs_off"),
+            F.col("n_on").cast("bigint").alias("n_runs_on"),
+            F.col("n_off").cast("bigint").alias("n_runs_off"),
         ]
-        for stat in ("rms", "min", "max"):
+        for stat in STATS:
             c = f"{stat}_{m}"
-            se2, dof = welch_components(
-                F.col(f"var_{c}"),
-                F.col("n_runs"),
-                F.col(f"var_{c}__off"),
-                F.col("n_runs__off"),
-            )
-            # NULLIF: zero variance on both sides (constant metric) makes
-            # sqrt(se2) exactly 0 — undefined t, not an ANSI throw (r11)
-            t = (F.col(f"avg_{c}") - F.col(f"avg_{c}__off")) / F.nullif(
-                F.sqrt(se2), F.lit(0.0)
-            )
+            t, dof = welch_t(c)
             fields += [
-                F.col(f"avg_{c}").alias(f"avg_{stat}_on"),
-                F.col(f"avg_{c}__off").alias(f"avg_{stat}_off"),
+                F.col(f"avg_{c}_on").alias(f"avg_{stat}_on"),
+                F.col(f"avg_{c}_off").alias(f"avg_{stat}_off"),
                 t.alias(f"t_{stat}"),
                 dof.alias(f"dof_{stat}"),
             ]
@@ -132,7 +114,7 @@ def _e2e_sql() -> str:
             "CAST(a.n AS BIGINT) AS n_runs_on",
             "CAST(b.n AS BIGINT) AS n_runs_off",
         ]
-        for stat in ("rms", "min", "max"):
+        for stat in STATS:
             c = f"{stat}_{m}"
             se2 = f"(a.var_{c} / a.n + b.var_{c} / b.n)"
             cols += [
@@ -149,14 +131,14 @@ def _e2e_sql() -> str:
     run_aggs = ", ".join(
         f"{stat_expr[stat].replace('f', 'f_' + m)} AS {stat}_{m}"
         for m in METRICS
-        for stat in ("rms", "min", "max")
+        for stat in STATS
     )
     group_aggs = ", ".join(
         [f"CAST(count(*) AS DOUBLE) AS n"]
         + [
             f"{fn}({stat}_{m}) AS {fn}_{stat}_{m}"
             for m in METRICS
-            for stat in ("rms", "min", "max")
+            for stat in STATS
             for fn in ("avg", "var_samp")
         ]
     ).replace("var_samp_", "var_").replace("var_samp(", "var_samp(")

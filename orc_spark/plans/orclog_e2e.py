@@ -6,19 +6,20 @@ metrics (accel/pitch/roll/jerk) — the engine's equivalent of one complete
 
 Plan shape (this is the whole point): ONE window stage computes all three
 median filters plus the jerk gradient; ONE per-run aggregation computes all
-12 (metric × rms/min/max) statistics; ONE per-group aggregation computes
-every mean/variance/count the Welch tests need. Two shuffles end-to-end
-regardless of how many metrics/tests ride on top — the same
-multi-aggregate-single-pass structure the reference hand-codes
+12 (metric × rms/min/max) statistics; ONE global aggregation of conditional
+aggregates (operators/stats.welch_sides) computes every per-side
+mean/variance/count the Welch tests need, so the upstream runs once. Two
+shuffles end-to-end regardless of how many metrics/tests ride on top — the
+same multi-aggregate-single-pass structure the reference hand-codes
 (main.py:73-76, 109-115).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orc_spark.operators.stats import _t_cdf, welch_components
+from orc_spark.operators.stats import p_value, welch_sides, welch_t
 from orc_spark.operators.timeseries import median_filter, np_gradient
 from orc_spark.sources.orclog import parse_orclog
 
@@ -59,21 +60,9 @@ def orclog_full_report(spark: SparkSession, paths) -> DataFrame:
         ]
     per_run = filt.groupBy(*RUN).agg(*aggs)
 
-    # one per-group aggregation: mean/var/count of every statistic
-    gaggs = [F.count(F.lit(1)).cast("double").alias("n_runs")]
-    for label, _src, _d in METRICS:
-        for stat in ("rms", "min", "max"):
-            col = f"{stat}_{label}"
-            gaggs += [
-                F.avg(col).alias(f"avg_{col}"),
-                F.var_samp(col).alias(f"var_{col}"),
-            ]
-    g = per_run.groupBy("actuators_enabled").agg(*gaggs)
-
-    on = g.where(F.col("actuators_enabled")).drop("actuators_enabled")
-    off = g.where(~F.col("actuators_enabled")).drop("actuators_enabled")
-    off = off.select([F.col(c).alias(f"{c}__off") for c in off.columns])
-    wide = on.crossJoin(off)
+    # one global aggregation: per-side mean/var/count of every statistic
+    stats = [f"{stat}_{label}" for label, _s, _d in METRICS for stat in ALTS]
+    wide = welch_sides(per_run, F.col("actuators_enabled"), stats)
 
     # reshape to one row per metric via explode-of-structs — a single select
     # over the single wide row (a union of per-metric selects would recompute
@@ -83,25 +72,18 @@ def orclog_full_report(spark: SparkSession, paths) -> DataFrame:
         fields = [
             F.lit(label).alias("metric"),
             F.lit(deriv).alias("derivative"),
-            F.col("n_runs").alias("n_runs_on"),
-            F.col("n_runs__off").alias("n_runs_off"),
+            F.col("n_on").alias("n_runs_on"),
+            F.col("n_off").alias("n_runs_off"),
         ]
-        for stat in ("rms", "min", "max"):
+        for stat, alt in ALTS.items():
             c = f"{stat}_{label}"
+            t, dof = welch_t(c)
             fields += [
-                F.col(f"avg_{c}").alias(f"avg_{stat}_on"),
-                F.col(f"avg_{c}__off").alias(f"avg_{stat}_off"),
+                F.col(f"avg_{c}_on").alias(f"avg_{stat}_on"),
+                F.col(f"avg_{c}_off").alias(f"avg_{stat}_off"),
+                t.alias(f"t_{stat}"),
+                p_value(t, dof, alt).alias(f"p_{stat}"),
             ]
-            se2, dof = welch_components(
-                F.col(f"var_{c}"),
-                F.col("n_runs"),
-                F.col(f"var_{c}__off"),
-                F.col("n_runs__off"),
-            )
-            t = (F.col(f"avg_{c}") - F.col(f"avg_{c}__off")) / F.sqrt(se2)
-            cdf = _t_cdf(t, dof)
-            p = cdf if ALTS[stat] == "less" else F.lit(1.0) - cdf
-            fields += [t.alias(f"t_{stat}"), p.alias(f"p_{stat}")]
         metric_structs.append(F.struct(*fields))
     return wide.select(
         F.explode(F.array(*metric_structs)).alias("m")

@@ -238,9 +238,9 @@ def ts_welch(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("user_id", "event_type")
         .agg(F.sqrt(F.avg(F.col("value") * F.col("value"))).alias("rms"))
     )
-    return welch_ttest(
-        per_run, "rms", F.col("event_type") == "click", with_p=False
-    ).select("t_stat", "dof")
+    return welch_ttest(per_run, "rms", F.col("event_type") == "click").select(
+        "t_stat", "dof"
+    )
 
 
 TS_WELCH_SQL = """
